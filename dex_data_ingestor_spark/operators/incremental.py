@@ -15,7 +15,8 @@ utilities:
   reference: SqlDbEtl.py:106-108).
 
 The bookmark table is a handful of rows (one per task); reading and
-writing it is O(tasks), never O(data).
+writing it is O(tasks), never O(data). It is read and written on the
+driver with ``pyarrow.parquet``, so it costs no Spark job.
 """
 
 from __future__ import annotations
@@ -23,11 +24,17 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
+from urllib.parse import urlsplit
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 
-from dex_data_ingestor_spark import schemas
+# ``schemas.ETL_CONTROL`` as Arrow. Fields stay nullable: Spark writes
+# its columns optional, and the dataset reader casts files to this.
+_ARROW_ETL_CONTROL = pa.schema(
+    [("task_name", pa.string()), ("last_run", pa.timestamp("us"))]
+)
 
 
 def ntz_lit(v):
@@ -84,18 +91,36 @@ def truncate_to_hour(ts: dt.datetime) -> dt.datetime:
 
 
 class Bookmark:
-    """Per-task watermark store on parquet (``etl_control`` analog).
+    """Per-task watermark store (``etl_control`` analog), kept on the
+    driver.
 
     One row per task_name; last-writer-wins on rewrite. The reference's
-    REPLACE INTO (SqlDbEtl.py:84-88) becomes an overwrite of a
-    task-count-sized table.
+    single-row REPLACE INTO (SqlDbEtl.py:84-88) becomes a rewrite of a
+    task-count-sized table: a directory holding one parquet file with
+    ``schemas.ETL_CONTROL``'s columns, ``last_run`` as a naive
+    microsecond timestamp (TIMESTAMP_NTZ to Spark). ``pyarrow.parquet``
+    reads and writes it in the driver process, so a bookmark read or
+    advance schedules no Spark job: for a few rows, a Spark collect or
+    write is all fixed per-job cost, and a tick does several of each.
+    The layout is Spark's, so ``spark.read.schema(ETL_CONTROL)`` reads
+    the table, and directories Spark wrote load here.
+
+    The store is local-filesystem only: a scheme-qualified path
+    (``s3a://``, ``hdfs://``, ``file:``) raises ``ValueError`` at
+    construction rather than after a task's merge has been written.
+    ``spark`` is accepted for signature compatibility and not used.
     """
 
     def __init__(self, spark: SparkSession, path: str):
+        if len(urlsplit(path).scheme) > 1:  # one letter: a drive, not a scheme
+            raise ValueError(
+                "Bookmark stores its table on the driver's local "
+                f"filesystem; got scheme-qualified path {path!r}"
+            )
         self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame:
+    def _read(self) -> dict[str, dt.datetime]:
         # Crash recovery: if a previous swap died between removing the
         # live dir and renaming the staged one, the staged dir holds the
         # complete new snapshot — finish the swap now.
@@ -103,35 +128,45 @@ class Bookmark:
         if not os.path.exists(self.path) and os.path.exists(tmp):
             os.replace(tmp, self.path)
         if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], schemas.ETL_CONTROL)
-        return self.spark.read.schema(schemas.ETL_CONTROL).parquet(self.path)
+            return {}
+        # Dataset discovery skips Spark's _SUCCESS and .crc side files.
+        table = pq.read_table(self.path, schema=_ARROW_ETL_CONTROL)
+        return dict(
+            zip(
+                table.column("task_name").to_pylist(),
+                table.column("last_run").to_pylist(),
+            )
+        )
 
     def get_last_run(self, task_name: str) -> dt.datetime | None:
-        rows = (
-            self._read()
-            .filter(F.col("task_name") == task_name)
-            .select("last_run")
-            .collect()
-        )
-        return rows[0].last_run if rows else None
+        return self._read().get(task_name)
 
     def set_last_run(self, task_name: str, last_run: dt.datetime) -> None:
         """Monotone advance: only moves the watermark forward
         (reference: SqlDbEtl.py:106-108)."""
-        current = self.get_last_run(task_name)
+        rows = self._read()
+        current = rows.pop(task_name, None)
         if current is not None and last_run <= current:
             return
-        others = self._read().filter(F.col("task_name") != task_name)
-        new_row = self.spark.createDataFrame(
-            [(task_name, last_run)], schemas.ETL_CONTROL
+        rows[task_name] = last_run
+        table = pa.table(
+            [
+                pa.array(list(rows), pa.string()),
+                pa.array(list(rows.values()), pa.timestamp("us")),
+            ],
+            schema=_ARROW_ETL_CONTROL,
         )
-        merged = others.unionByName(new_row)
-        # Tiny table: stage the full snapshot, materialize it (the plan
-        # reads the live dir, so the swap below can't race the write),
-        # then swap via rename. The only crash window is between rmtree
-        # and replace, and _read() recovers from the staged dir there.
+        # Stage the full snapshot, then swap via rename. The file is
+        # written under a hidden name (readers skip it) and renamed
+        # inside the staging dir, so a staged dir never holds a torn
+        # file. The only crash window is between rmtree and replace,
+        # and _read() recovers from the staged dir there.
         tmp = self.path + "._tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        staged = os.path.join(tmp, ".inprogress")
+        pq.write_table(table, staged)
+        os.replace(staged, os.path.join(tmp, "part-00000.parquet"))
         if os.path.exists(self.path):
             shutil.rmtree(self.path)
         os.replace(tmp, self.path)

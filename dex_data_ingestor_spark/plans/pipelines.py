@@ -25,10 +25,12 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from dex_data_ingestor_spark import schemas
 from dex_data_ingestor_spark.functions.scalars import (
     apy_compound_monthly,
     derived_tvl,
@@ -57,12 +59,21 @@ class DexWarehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.bookmark = Bookmark(spark, os.path.join(root, "etl_control"))
+
+    @functools.cached_property
+    def bookmark(self) -> Bookmark:
+        # Built on first use: the bookmark store is local-only and
+        # rejects a remote root, which must not stop merge_write into
+        # a remote warehouse from working.
+        return Bookmark(self.spark, os.path.join(self.root, "etl_control"))
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
     def read(self, table: str, schema=None) -> DataFrame | None:
+        """The stored table, or None if it does not exist. A table named
+        in ``schemas.WAREHOUSE`` is read with its declared schema, so
+        no parquet schema-inference job runs."""
         from dex_data_ingestor_spark.io import table_exists
 
         p = self.path(table)
@@ -73,6 +84,8 @@ class DexWarehouse:
         # window's rows on every run.
         if not table_exists(self.spark, p):
             return None
+        if schema is None:
+            schema = schemas.WAREHOUSE.get(table)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
@@ -85,8 +98,16 @@ class DexWarehouse:
         keys: list[str],
         update_cols: list[str] | None = None,
         partition_col: str | None = None,
-    ) -> None:
-        """merge_upsert into the stored table.
+    ) -> int:
+        """merge_upsert into the stored table; returns the number of
+        ``updates`` rows merged.
+
+        The count costs no job of its own: on the merge path it is
+        observed (``DataFrame.observe``) on ``updates`` while the
+        staged write runs, and the initial write takes it from the
+        emptiness check it needs anyway. Callers return this number
+        rather than counting ``updates`` themselves, which would rerun
+        the whole window plan.
 
         With ``partition_col`` (must be one of ``keys``), the merge is
         partition-pruned: only the partitions present in ``updates``
@@ -100,13 +121,14 @@ class DexWarehouse:
             # event) must not initialize the table: zero rows write a
             # file-less directory that every later read fails to infer
             # a schema from; the first non-empty window initializes
-            if updates.isEmpty():
-                return
+            n = updates.count()
+            if n == 0:
+                return 0
             writer = updates.write.mode("overwrite")
             if partition_col is not None:
                 writer = writer.partitionBy(partition_col)
             writer.parquet(self.path(table))
-            return
+            return n
         # The staging copy below removes read-your-own-lineage hazards,
         # but the final overwrite is NOT crash-atomic on parquet (the
         # target is deleted before it is rewritten); a failure in that
@@ -114,23 +136,30 @@ class DexWarehouse:
         # crash-atomic production sink is the snapshot table's
         # manifest commit (operators/snapshots.py; streaming twin
         # foreach_batch_merge_snapshots).
+        #
+        # The observation is filled by the staging write's job. A write
+        # that raises propagates before ``obs.get``, which would
+        # otherwise block on metrics that never arrive.
+        obs = Observation()
+        observed = updates.observe(obs, F.count(F.lit(1)).alias("rows"))
+        staging = self.path(table) + "._staging"
         if partition_col is None:
-            merged = merge_upsert(existing, updates, keys, update_cols)
-            staging = self.path(table) + "._staging"
+            merged = merge_upsert(existing, observed, keys, update_cols)
             merged.write.mode("overwrite").parquet(staging)
-            self.spark.read.parquet(staging).write.mode("overwrite").parquet(
-                self.path(table)
-            )
-            return
+            self.spark.read.schema(merged.schema).parquet(staging).write.mode(
+                "overwrite"
+            ).parquet(self.path(table))
+            return obs.get["rows"]
         # Partition-pruned merge: semi-join restricts the existing scan
         # to touched partitions (partition filter pushes to the file
         # index); dynamic overwrite replaces exactly those partitions.
+        # ``touched`` comes from the un-observed ``updates`` so the
+        # observed node appears once in the plan.
         touched = updates.select(partition_col).distinct()
         existing_touched = existing.join(
             F.broadcast(touched), partition_col, "left_semi"
         )
-        merged = merge_upsert(existing_touched, updates, keys, update_cols)
-        staging = self.path(table) + "._staging"
+        merged = merge_upsert(existing_touched, observed, keys, update_cols)
         merged.write.mode("overwrite").parquet(staging)
         prev_mode = self.spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode", "static"
@@ -139,13 +168,14 @@ class DexWarehouse:
             "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
         try:
-            self.spark.read.parquet(staging).write.mode(
+            self.spark.read.schema(merged.schema).parquet(staging).write.mode(
                 "overwrite"
             ).partitionBy(partition_col).parquet(self.path(table))
         finally:
             self.spark.conf.set(
                 "spark.sql.sources.partitionOverwriteMode", prev_mode
             )
+        return obs.get["rows"]
 
 
 # ---------------------------------------------------------------------------
@@ -189,16 +219,14 @@ def sync_dim_tokens(
         F.lit(1).alias("asset_type_id"),
         F.col("ts").alias("updated_at"),
     )
-    # count BEFORE writing: the merge plan's lineage includes the
-    # existing table files, which the write replaces.
-    n = dim.count()
-    wh.merge_write(
+    # merge_write returns the row count of ``dim``, observed during
+    # the write; a separate count would rerun the window plan.
+    return wh.merge_write(
         "dim_tokens",
         dim,
         keys=["chain_id", "address"],
         update_cols=["symbol", "name", "decimals", "asset_type_id", "updated_at"],
     )
-    return n
 
 
 def _daily_recompute_window(
@@ -298,8 +326,7 @@ def sync_token_daily_stats(
             ntz_lit(window_hi).alias("created_at"),
         )
     )
-    n = fact.count()
-    wh.merge_write(
+    return wh.merge_write(
         "fact_token_daily_stats",
         fact,
         keys=["token_id", "date"],
@@ -314,7 +341,6 @@ def sync_token_daily_stats(
         ],
         partition_col="date",
     )
-    return n
 
 
 def sync_yield_stats(
@@ -348,15 +374,13 @@ def sync_yield_stats(
         derived_tvl(F.col("supply"), F.col("price")).alias("tvl_usd"),
         ntz_lit(window_hi).alias("created_at"),
     )
-    n = fact.count()
-    wh.merge_write(
+    return wh.merge_write(
         "fact_yield_stats",
         fact,
         keys=["token_id", "pool_address", "date"],
         update_cols=["apy", "tvl", "tvl_usd", "created_at"],
         partition_col="date",
     )
-    return n
 
 
 TASKS = {
@@ -522,15 +546,13 @@ def sync_stellar_pool_task(
         "price_usd",
         ntz_lit(window_hi).alias("created_at"),
     )
-    n = fact.count()
-    wh.merge_write(
+    return wh.merge_write(
         "fact_token_daily_stats",
         fact,
         keys=["token_id", "date"],
         update_cols=["price_usd", "created_at"],
         partition_col="date",
     )
-    return n
 
 
 TASKS.update(
@@ -619,12 +641,13 @@ def etl_backfill(
 
     us = dt.timedelta(microseconds=1)
     reports: list[dict] = []
+    bookmark = wh.bookmark  # a remote root raises here, before any merge
     lo = start
     while lo < end:
         hi = min(lo + step, end)
         t0 = time.perf_counter()
         count = TASKS[task_name](wh, source, lo - us, hi - us)
-        wh.bookmark.set_last_run(task_name, hi - us)
+        bookmark.set_last_run(task_name, hi - us)
         reports.append(
             {
                 "task": task_name,

@@ -149,7 +149,10 @@ DIM_CHAINS = T.StructType(
 DIM_TOKENS = T.StructType(
     [
         T.StructField("id", T.LongType(), False),  # deterministic surrogate
-        T.StructField("chain_id", T.LongType(), False),
+        # int, as sync_dim_tokens writes it: the surrogate id and every
+        # fact's token_id hash the int literal 1, so a bigint here
+        # would change every key
+        T.StructField("chain_id", T.IntegerType(), False),
         T.StructField("address", T.StringType(), False),
         T.StructField("symbol", T.StringType()),
         T.StructField("name", T.StringType()),

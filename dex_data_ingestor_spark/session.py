@@ -155,6 +155,18 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the cores this process may run
+    on (its CPU affinity where the OS reports one)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0)) or 1
+    except AttributeError:  # no affinity API (macOS, Windows)
+        return os.cpu_count() or 1
+
+
 def get_session(
     app_name: str = "dex-data-ingestor-spark",
     master: str | None = None,
@@ -164,15 +176,15 @@ def get_session(
 ) -> SparkSession:
     """Build (or get) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    for the test/bench harness; on a real cluster pass ``None`` via
-    spark-submit and the cluster manager decides.
+    ``master`` defaults to ``local[n]`` and the shuffle partitions to
+    ``n``, with ``n = default_cpus()``: ``$SPARK_GRAFT_CPUS``, else the
+    host's cores. On a real cluster pass ``None`` via spark-submit and
+    the cluster manager decides.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cpus()}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = default_cpus()
 
     builder = (
         SparkSession.builder.appName(app_name)

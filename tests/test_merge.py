@@ -1,6 +1,8 @@
 """merge_upsert semantics + idempotence property (reference H4:
 re-running a window is harmless; SURVEY.md §5 strategy 3)."""
 
+import re
+
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -125,6 +127,105 @@ def test_bookmark_no_tmp_leak_and_crash_recovery(spark, tmp_path):
     bm.set_last_run("other", t1)
     assert bm.get_last_run("other") == t1
     assert bm.get_last_run("a") == t1 and bm.get_last_run("b") == t2
+
+
+@pytest.fixture
+def new_york_process_tz(monkeypatch):
+    """Process TZ away from UTC (and from the Asia/Hong_Kong session
+    zone), so a naive-datetime conversion through local time shows."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_bookmark_reads_spark_written_table(spark, tmp_path, new_york_process_tz):
+    """An etl_control directory written through Spark (part file plus
+    _SUCCESS and .crc side files) reads back through Bookmark with the
+    same wall-clock values, and advances from there."""
+    import datetime as dt
+    import os
+
+    from dex_data_ingestor_spark import schemas
+    from dex_data_ingestor_spark.operators.incremental import Bookmark
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "Asia/Hong_Kong"
+    path = str(tmp_path / "etl_control")
+    t_a, t_b = dt.datetime(2024, 1, 1, 10), dt.datetime(2024, 3, 10, 2, 30, 0, 5)
+    spark.createDataFrame([("a", t_a), ("b", t_b)], schemas.ETL_CONTROL).coalesce(
+        1
+    ).write.parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    bm = Bookmark(spark, path)
+    assert bm.get_last_run("a") == t_a and bm.get_last_run("b") == t_b
+    bm.set_last_run("a", t_a + dt.timedelta(hours=1))
+    assert bm.get_last_run("a") == t_a + dt.timedelta(hours=1)
+    assert bm.get_last_run("b") == t_b
+
+
+def test_bookmark_table_reads_through_spark(spark, tmp_path, new_york_process_tz):
+    """The driver-written table keeps Spark's layout: read with
+    ``schemas.ETL_CONTROL`` it yields the same wall-clock last_run, both
+    collected and as rendered by Spark itself."""
+    import datetime as dt
+
+    from dex_data_ingestor_spark import schemas
+    from dex_data_ingestor_spark.operators.incremental import Bookmark
+
+    path = str(tmp_path / "etl_control")
+    t = dt.datetime(2024, 3, 10, 2, 30, 0, 5)  # a New York DST-gap hour
+    Bookmark(spark, path).set_last_run("task", t)
+    df = spark.read.schema(schemas.ETL_CONTROL).parquet(path)
+    rows = df.select(
+        "task_name",
+        "last_run",
+        F.date_format("last_run", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("wall"),
+    ).collect()
+    assert [tuple(r) for r in rows] == [
+        ("task", t, "2024-03-10 02:30:00.000005")
+    ]
+    # without a schema Spark infers the same types
+    assert spark.read.parquet(path).dtypes == [
+        ("task_name", "string"),
+        ("last_run", "timestamp_ntz"),
+    ]
+
+
+@pytest.mark.parametrize(
+    "root", ["s3a://bucket/warehouse", "hdfs://localhost:8020/wh", "file:///tmp/wh"]
+)
+def test_bookmark_rejects_scheme_qualified_path(spark, sf_dir, tmp_path, root):
+    """The driver-side store is local-only. A remote path raises
+    ValueError naming it, and a task against a remote warehouse root
+    raises before any merge is written."""
+    import datetime as dt
+
+    from dex_data_ingestor_spark.io import load_table
+    from dex_data_ingestor_spark.operators.incremental import Bookmark
+    from dex_data_ingestor_spark.plans.pipelines import (
+        DexWarehouse,
+        etl_backfill,
+        etl_job_till_now,
+    )
+
+    path = root + "/etl_control"
+    with pytest.raises(ValueError, match=re.escape(path)):
+        Bookmark(spark, path)
+    wh = DexWarehouse(spark, root)
+    events = load_table(spark, sf_dir, "events")
+    with pytest.raises(ValueError, match=re.escape(path)):
+        etl_job_till_now(wh, "sync_yield_stats", events, dt.datetime(2024, 2, 1))
+    with pytest.raises(ValueError, match=re.escape(path)):
+        etl_backfill(
+            wh, "sync_yield_stats", events,
+            dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2),
+        )
+    # a local path with a colon is not a scheme
+    Bookmark(spark, str(tmp_path / "a:b")).set_last_run("t", dt.datetime(2024, 1, 1))
 
 
 def test_cdc_apply_delete_and_tie_semantics(spark):

@@ -242,6 +242,86 @@ def test_backfill_chunks_equal_single_window(spark, sf_dir, tmp_path):
     assert a == b and len(a) > 0
 
 
+_TICK_TASKS = ["sync_dim_tokens", "sync_token_daily_stats", "sync_yield_stats"]
+_MERGE_WRITE_CALLERS = _TICK_TASKS + ["sync_stellar_pool"]
+
+
+def test_merge_write_callers_return_observed_update_count(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Each task that calls merge_write returns exactly the row count of
+    the ``updates`` it merged: on the initial write, on a merging tick,
+    and 0 on an empty re-run."""
+    expected: list[int] = []
+    original = DexWarehouse.merge_write
+
+    def counting(self, table, updates, *args, **kwargs):
+        # counted before the write, against the pre-write table
+        expected.append(updates.count())
+        return original(self, table, updates, *args, **kwargs)
+
+    monkeypatch.setattr(DexWarehouse, "merge_write", counting)
+    events = load_table(spark, sf_dir, "events")
+    wh = DexWarehouse(spark, str(tmp_path / "wh"))
+    seen = []
+    for now in (dt.datetime(2024, 1, 15, 6, 20), NOW, NOW):
+        got = []
+        for task in _MERGE_WRITE_CALLERS:
+            expected.clear()
+            n, _ = etl_job_till_now(wh, task, events, now)
+            assert expected == [n], (task, now)
+            got.append(n)
+        seen.append(got)
+    first, tick, rerun = seen
+    assert all(n > 0 for n in first + tick), seen
+    assert rerun == [0, 0, 0, 0], seen
+
+
+def test_tick_job_count(spark, sf_dir, tmp_path):
+    """One hourly tick of the three tasks runs at most 28 Spark jobs
+    here (sf0.001, local[8]; 64 when the bookmark went through Spark
+    and each task counted its updates). The bookmark reads and
+    advances run on the driver, the row counts are observed on the
+    staged writes, and stored tables and staging copies are read with
+    their schemas, so no collect, count or schema-inference job is
+    left in the tick."""
+    events = load_table(spark, sf_dir, "events")
+    wh = DexWarehouse(spark, str(tmp_path / "wh"))
+    for task in _TICK_TASKS:
+        etl_job_till_now(wh, task, events, dt.datetime(2024, 1, 20, 3))
+    sc, group = spark.sparkContext, "test-tick-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        counts = [
+            etl_job_till_now(wh, t, events, dt.datetime(2024, 1, 21, 5, 10))[0]
+            for t in _TICK_TASKS
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(n > 0 for n in counts[1:]), counts
+    assert jobs <= 28, jobs
+
+
+def test_stored_tables_match_declared_schemas(spark, sf_dir, tmp_path):
+    """Every table the pipelines write carries exactly the columns and
+    types ``schemas.WAREHOUSE`` declares, read back without a schema
+    (DexWarehouse.read relies on the declaration)."""
+    from dex_data_ingestor_spark import schemas
+
+    root = str(tmp_path / "wh")
+    run_catchup(spark, sf_dir, root, NOW)
+    wh = DexWarehouse(spark, root)
+    for t in ("dim_tokens", "fact_token_daily_stats", "fact_yield_stats",
+              "etl_control"):
+        stored = dict(spark.read.parquet(wh.path(t)).dtypes)
+        declared = {f.name: f.dataType.simpleString() for f in schemas.WAREHOUSE[t]}
+        assert stored == declared, t
+        # and the declared read keeps the stored column order
+        assert wh.read(t).columns == spark.read.parquet(wh.path(t)).columns, t
+
+
 @pytest.mark.slow
 @pytest.mark.parametrize(
     "task",
