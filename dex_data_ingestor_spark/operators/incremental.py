@@ -28,7 +28,7 @@ from urllib.parse import urlsplit
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # ``schemas.ETL_CONTROL`` as Arrow. Fields stay nullable: Spark writes
 # its columns optional, and the dataset reader casts files to this.
@@ -108,16 +108,14 @@ class Bookmark:
     The store is local-filesystem only: a scheme-qualified path
     (``s3a://``, ``hdfs://``, ``file:``) raises ``ValueError`` at
     construction rather than after a task's merge has been written.
-    ``spark`` is accepted for signature compatibility and not used.
     """
 
-    def __init__(self, spark: SparkSession, path: str):
+    def __init__(self, path: str):
         if len(urlsplit(path).scheme) > 1:  # one letter: a drive, not a scheme
             raise ValueError(
                 "Bookmark stores its table on the driver's local "
                 f"filesystem; got scheme-qualified path {path!r}"
             )
-        self.spark = spark
         self.path = path
 
     def _read(self) -> dict[str, dt.datetime]:

@@ -281,9 +281,14 @@ def lsh_candidate_pairs(
     against duplicate (id, band) input rows — duplicates land in the
     same or adjacent cells and self-pairs fail the strict inequality).
 
+    NULLs: a row whose ``band_id`` or ``band_hash`` is NULL belongs to
+    no bucket and pairs with nothing (equi-join semantics, as in the
+    oracle's bucket CTE); it is filtered out before the aggregation. A
+    NULL id inside a bucket never pairs but still counts toward the
+    bucket's size.
+
     Plan shape (r14): ONE (band_id, band_hash) aggregation folds each
-    bucket into a sorted member array (plus the raw row count, which
-    includes NULL ids exactly as the old sizing window did), and pairs
+    bucket into a sorted member array (plus the raw row count), and pairs
     are emitted by higher-order array functions — all-pairs for small
     buckets, per-(grouping, cell) slice all-pairs for hot ones. This
     replaces the previous shape (sizing window + rank window + two
@@ -313,6 +318,7 @@ def lsh_candidate_pairs(
     # pair (a_id < b_id is NULL-false), so only the offset matters.
     grouped = (
         buckets.select(F.col(id_col).alias("a_id"), "band_id", "band_hash")
+        .filter(F.col("band_id").isNotNull() & F.col("band_hash").isNotNull())
         .groupBy("band_id", "band_hash")
         .agg(
             F.count(F.lit(1)).alias("__n"),

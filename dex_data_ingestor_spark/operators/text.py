@@ -398,7 +398,8 @@ def _unigram_weight_table(
     df: DataFrame, text_col: str, n_buckets: int
 ) -> DataFrame:
     """(f, nll_f, big_n) hashed-unigram LM weights over the corpus —
-    the shared model-fit for unigram_logloss and unigram_model_row."""
+    unigram_model_row's fit (the same counts and _nll_units
+    quantization as unigram_logloss's collected fit)."""
     inst = _hashed_instances(df, None, text_col, n_buckets)
     feat = inst.groupBy("f").agg(F.count(F.lit(1)).alias("c_f"))
     tot = feat.agg(F.sum("c_f").cast("bigint").alias("big_n"))
@@ -411,32 +412,20 @@ def _unigram_weight_table(
     )
 
 
-def _maybe_collect_model(w: DataFrame, materialize_model: bool) -> DataFrame:
-    """The model/apply diamond switch (the curate-pipeline lesson):
-    the single-statement form scans the corpus once per plan branch;
-    collecting the O(n_buckets) weight table severs that lineage so
-    scoring is ONE further corpus pass. The collect is bounded by the
-    bucket count — model state like the IVF centroids, never data.
-
-    The LM fits below (unigram/bigram/DSIR) go one step further when
-    materializing: they collect the raw COUNT table (one corpus pass)
-    and derive the totals driver-side (exact integer sums — identical
-    to SUM()) plus the weight expressions on the collected LOCAL
-    relation (same JVM expressions, so libm/IEEE sequences — and
-    therefore quantized values — are unchanged). The single-statement
-    form computes totals as a second aggregate OVER the count table,
-    which re-executes the count table's corpus scan once more unless
-    AQE exchange reuse catches it; the local-relation form makes the
-    fit exactly one corpus pass by construction."""
-    if not materialize_model:
-        return w
-    local, _ = _collect_local(w)
-    return local
-
-
 def _collect_local(df: DataFrame):
     """Collect a BOUNDED model table through Arrow and rebuild it as a
-    JVM LocalRelation: ``createDataFrame(pyarrow.Table)`` plans as a
+    JVM LocalRelation — how the LM fits (unigram/bigram/DSIR) sever
+    the model/apply diamond. A single-statement fit scans the corpus
+    once per plan branch, and its totals (a second aggregate over the
+    count table) re-execute that scan unless AQE exchange reuse
+    catches it. Collecting the raw COUNT table instead makes the fit
+    exactly one corpus pass: totals are derived driver-side (exact
+    integer sums, identical to SUM()) and the weight expressions run
+    on the local relation (the same JVM expressions on the same
+    operands, so quantized values are bit-equal), leaving scoring as
+    the only corpus scan in the returned plan. The collect is bounded
+    by the bucket count — model state like the IVF centroids, never
+    data. ``createDataFrame(pyarrow.Table)`` plans as a
     LocalTableScan, so every later evaluation (broadcast build per
     query run) stays in the JVM. The naive ``collect()`` +
     ``createDataFrame(rows)`` pair plans as a PYTHON-pickled RDD scan
@@ -454,7 +443,6 @@ def unigram_logloss(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 65536,
-    materialize_model: bool = False,
 ) -> DataFrame:
     """Per-document average negative log-likelihood under a corpus
     hashed-unigram LM (the CCNet perplexity-filtering signal; see
@@ -462,34 +450,24 @@ def unigram_logloss(
     quantization before aggregation makes per-doc sums order-free
     exact integers)."""
     inst = _hashed_instances(df, id_col, text_col, n_buckets)
-    if materialize_model:
-        # Fit = ONE corpus pass: collect the bounded (f, c_f) count
-        # table (<= n_buckets rows — model state, never data), total
-        # it driver-side (exact integer sum == SUM()), and evaluate
-        # the nll expression on the local relation — the identical
-        # _nll_units JVM expression on identical operands, so the
-        # quantized weights are bit-equal to the distributed form's.
-        # Scoring below is then the ONLY corpus scan in the returned
-        # plan. The Arrow round trip (_collect_local) keeps the local
-        # relation a JVM LocalTableScan.
-        feat = (
-            _hashed_instances(df, None, text_col, n_buckets)
-            .groupBy("f")
-            .agg(F.count(F.lit(1)).alias("c_f"))
-        )
-        local, cols = _collect_local(feat)
-        big_n = sum(cols["c_f"])
-        w = local.select(
-            "f",
-            _nll_units(
-                F.col("c_f").cast("double"),
-                F.lit(big_n).cast("bigint"),
-            ).alias("nll_f"),
-        )
-    else:
-        w = _unigram_weight_table(df, text_col, n_buckets).select(
-            "f", "nll_f"
-        )
+    # Fit = ONE corpus pass (see _collect_local): collect the bounded
+    # (f, c_f) count table (<= n_buckets rows), total it driver-side
+    # and evaluate the identical _nll_units expression on the local
+    # relation.
+    feat = (
+        _hashed_instances(df, None, text_col, n_buckets)
+        .groupBy("f")
+        .agg(F.count(F.lit(1)).alias("c_f"))
+    )
+    local, cols = _collect_local(feat)
+    big_n = sum(cols["c_f"])
+    w = local.select(
+        "f",
+        _nll_units(
+            F.col("c_f").cast("double"),
+            F.lit(big_n).cast("bigint"),
+        ).alias("nll_f"),
+    )
     return (
         inst.join(F.broadcast(w), "f")
         .groupBy(id_col)
@@ -510,7 +488,6 @@ def dsir_importance(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 4096,
-    materialize_model: bool = False,
 ) -> DataFrame:
     """DSIR hashed-feature importance weights: per-document
     log-likelihood ratio of the ``target_pred`` slice vs the raw pool
@@ -526,34 +503,19 @@ def dsir_importance(
         F.count(F.when(F.col("__tgt"), 1)).alias("t_f"),
     )
     half_b = n_buckets / 2.0
-    if materialize_model:
-        # Fit = ONE corpus pass (see _maybe_collect_model): collect
-        # the bounded (f, s_f, t_f) count table, total driver-side
-        # (exact integer sums), log-ratio on the local relation with
-        # the identical JVM expression — weights bit-equal to the
-        # distributed form's.
-        local, cols = _collect_local(feat)
-        big_s = sum(cols["s_f"])
-        big_t = sum(cols["t_f"])
-        ratio = (
-            (F.col("t_f") + 0.5) * (F.lit(big_s).cast("bigint") + half_b)
-        ) / ((F.col("s_f") + 0.5) * (F.lit(big_t).cast("bigint") + half_b))
-        w = local.select(
-            "f",
-            F.floor(F.log(ratio) * 1000000.0 + F.lit(0.5)).alias("w_f"),
-        )
-    else:
-        tot = feat.agg(
-            F.sum("s_f").cast("bigint").alias("big_s"),
-            F.sum("t_f").cast("bigint").alias("big_t"),
-        )
-        ratio = (
-            (F.col("t_f") + 0.5) * (F.col("big_s") + half_b)
-        ) / ((F.col("s_f") + 0.5) * (F.col("big_t") + half_b))
-        w = feat.crossJoin(F.broadcast(tot)).select(
-            "f",
-            F.floor(F.log(ratio) * 1000000.0 + F.lit(0.5)).alias("w_f"),
-        )
+    # Fit = ONE corpus pass (see _collect_local): collect the bounded
+    # (f, s_f, t_f) count table, total driver-side (exact integer
+    # sums), log-ratio on the local relation.
+    local, cols = _collect_local(feat)
+    big_s = sum(cols["s_f"])
+    big_t = sum(cols["t_f"])
+    ratio = (
+        (F.col("t_f") + 0.5) * (F.lit(big_s).cast("bigint") + half_b)
+    ) / ((F.col("s_f") + 0.5) * (F.lit(big_t).cast("bigint") + half_b))
+    w = local.select(
+        "f",
+        F.floor(F.log(ratio) * 1000000.0 + F.lit(0.5)).alias("w_f"),
+    )
     return (
         inst.join(F.broadcast(w), "f")
         .groupBy(id_col)
@@ -663,7 +625,6 @@ def bigram_logloss(
     text_col: str = "text",
     n_pair_buckets: int = 65536,
     n_prev_buckets: int = 16384,
-    materialize_model: bool = False,
 ) -> DataFrame:
     """Per-document average CONDITIONAL negative log-likelihood under
     a corpus hashed-bigram LM: each pair instance scores
@@ -682,66 +643,60 @@ def bigram_logloss(
     per-instance (its operands need both model tables) but its
     distinct-argument set is bounded by distinct (c2, c1) pairs.
 
-    Plan: two bounded model aggregates (f2-keyed and f1-keyed — at
+    Plan: the two bounded model tables (f2-keyed and f1-keyed — at
     most n_pair_buckets + n_prev_buckets rows regardless of corpus
-    size, THE reason to hash), both broadcast onto the instance
-    stream, then one doc_id exchange. ``materialize_model`` severs
-    the model/apply diamond exactly as in unigram_logloss: collect
-    the two bounded tables and scoring is ONE corpus pass."""
+    size, THE reason to hash) are fitted in one corpus pass and
+    collected (see _collect_local), then both broadcast onto the
+    instance stream, then one doc_id exchange: scoring is the ONE
+    corpus scan of the returned plan."""
     inst = _bigram_instances(
         df, id_col, text_col, n_pair_buckets, n_prev_buckets
     )
     stream = _bigram_instances(
         df, None, text_col, n_pair_buckets, n_prev_buckets
     )
-    if materialize_model:
-        # Fit = ONE corpus pass for BOTH model tables: each pair
-        # instance explodes into its two count roles (0 -> f2 pair
-        # key, 1 -> f1 predecessor key — the same narrow role-explode
-        # trick as period_over_period_multi), one bounded aggregate
-        # (<= n_pair_buckets + n_prev_buckets rows) is collected, and
-        # the rows split driver-side. Counts are exact integers, so
-        # num/den are value-identical to the separate aggregates; the
-        # nll expression below is unchanged. Scoring is then the ONLY
-        # corpus scan in the returned plan (was: 3 corpus scans).
-        both = (
-            stream.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(0).alias("role"),
-                            F.col("f2").alias("key"),
-                        ),
-                        F.struct(
-                            F.lit(1).alias("role"),
-                            F.col("f1").alias("key"),
-                        ),
-                    )
-                ).alias("rk")
-            )
-            .groupBy(
-                F.col("rk.role").alias("role"), F.col("rk.key").alias("key")
-            )
-            .agg(F.count(F.lit(1)).alias("c"))
+    # Fit = ONE corpus pass for BOTH model tables: each pair
+    # instance explodes into its two count roles (0 -> f2 pair
+    # key, 1 -> f1 predecessor key — the same narrow role-explode
+    # trick as period_over_period_multi), one bounded aggregate
+    # (<= n_pair_buckets + n_prev_buckets rows) is collected, and
+    # the rows split driver-side. Counts are exact integers, so
+    # num/den are value-identical to two separate per-key aggregates.
+    both = (
+        stream.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.lit(0).alias("role"),
+                        F.col("f2").alias("key"),
+                    ),
+                    F.struct(
+                        F.lit(1).alias("role"),
+                        F.col("f1").alias("key"),
+                    ),
+                )
+            ).alias("rk")
         )
-        import pyarrow as pa
+        .groupBy(
+            F.col("rk.role").alias("role"), F.col("rk.key").alias("key")
+        )
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    import pyarrow as pa
 
-        tbl = both.toArrow()
-        spark = df.sparkSession
-        is_num = pa.compute.equal(tbl["role"], 0)
-        num = spark.createDataFrame(
-            tbl.filter(is_num)
-            .select(["key", "c"])
-            .rename_columns(["f2", "c2"])
-        )
-        den = spark.createDataFrame(
-            tbl.filter(pa.compute.invert(is_num))
-            .select(["key", "c"])
-            .rename_columns(["f1", "c1"])
-        )
-    else:
-        num = stream.groupBy("f2").agg(F.count(F.lit(1)).alias("c2"))
-        den = stream.groupBy("f1").agg(F.count(F.lit(1)).alias("c1"))
+    tbl = both.toArrow()
+    spark = df.sparkSession
+    is_num = pa.compute.equal(tbl["role"], 0)
+    num = spark.createDataFrame(
+        tbl.filter(is_num)
+        .select(["key", "c"])
+        .rename_columns(["f2", "c2"])
+    )
+    den = spark.createDataFrame(
+        tbl.filter(pa.compute.invert(is_num))
+        .select(["key", "c"])
+        .rename_columns(["f1", "c1"])
+    )
     nll = _nll_units(F.col("c2").cast("double"), F.col("c1"))
     return (
         inst.join(F.broadcast(num), "f2")
@@ -969,7 +924,6 @@ def nb_classify(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 4096,
-    materialize_model: bool = False,
 ) -> DataFrame:
     """Multinomial Naive Bayes document classifier over hashed word
     features — the model-BASED quality/domain filter of the curation
@@ -1000,12 +954,9 @@ def nb_classify(
     broadcast to the scoring join; the test-side fan-out is
     n_classes x per-token, folded map-side by the (doc, class)
     partial aggregation before one doc-keyed exchange. Fitting is one
-    shuffle on (class, f). ``materialize_model`` severs the fit/score
-    diamond exactly like the LM scorers (the curate-pipeline lesson).
+    shuffle on (class, f), inline in the returned plan.
     """
     priors, model = _nb_fit(train_df, label_col, text_col, n_buckets)
-    model = _maybe_collect_model(model, materialize_model)
-    priors = _maybe_collect_model(priors, materialize_model)
 
     te_inst = _hashed_instances(test_df, id_col, text_col, n_buckets)
     scored = (

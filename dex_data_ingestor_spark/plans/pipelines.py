@@ -65,7 +65,7 @@ class DexWarehouse:
         # Built on first use: the bookmark store is local-only and
         # rejects a remote root, which must not stop merge_write into
         # a remote warehouse from working.
-        return Bookmark(self.spark, os.path.join(self.root, "etl_control"))
+        return Bookmark(os.path.join(self.root, "etl_control"))
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -134,7 +134,7 @@ class DexWarehouse:
         # target is deleted before it is rewritten); a failure in that
         # window needs the staging dir or a re-run to restore. The
         # crash-atomic production sink is the snapshot table's
-        # manifest commit (operators/snapshots.py; streaming twin
+        # manifest commit (snapshots.py; streaming twin
         # foreach_batch_merge_snapshots).
         #
         # The observation is filled by the staging write's job. A write

@@ -32,9 +32,10 @@ DuckDB):
   events.value IS an exact short decimal by generation, so the
   _dec_sum CAST path stays (proven at sf0.1 across every events
   aggregate).
-- ``events.ts`` is TIMESTAMP(NANOS) on disk: Spark reads it at
-  microsecond precision (io.load_table), so every oracle reference to
-  it is ``CAST(ts AS TIMESTAMP)`` (ns -> us truncation) first.
+- ``events.ts`` is TIMESTAMP(MICROS, NTZ) on disk in every shipped SF.
+  The older TIMESTAMP(NANOS) encoding is still read, truncated to
+  microseconds (io.load_table), so every oracle reference to it is
+  ``CAST(ts AS TIMESTAMP)`` first (a no-op on µs, ns -> us on ns).
 - string hashing portable across engines: first 8 hex chars of md5 as
   an int64 (functions.scalars.md5_int64).
 
@@ -7918,26 +7919,19 @@ def q_dsir_weights(spark, sf_dir):
     (<= 4096 distinct feature ratios) and micro-unit quantization
     absorbs last-ULP libm divergence (verified sf0.001 + sf0.01).
 
-    Plan: an f-keyed exchange builds the <=4096-row feature table
-    (conditional agg gives raw and target counts in one pass), the
-    one-row totals and the weight table broadcast back onto the
-    instance stream, one doc_id exchange aggregates. Plan (r14): this
-    entry runs the MATERIALIZED model/apply form — the 100 TB shape:
-    the fit collects the bounded (f, s_f, t_f) count table in ONE
-    corpus pass (<= 4096 rows — model state like the IVF centroids,
+    Plan: the fit collects the bounded (f, s_f, t_f) count table in
+    ONE corpus pass (conditional agg gives raw and target counts
+    together; <= 4096 rows — model state like the IVF centroids,
     never data-sized; totals are exact driver-side integer sums and
-    the log-ratio runs on the collected local relation with the
-    identical JVM expression, so weights are bit-equal), and the
-    returned plan scores in ONE further corpus pass. The
-    single-statement diamond form it replaces scanned the corpus once
-    per plan branch (~3x). The oracle SQL is unchanged — same values
-    by construction, re-proven on the flip."""
+    the log-ratio runs on the collected local relation), the weight
+    table broadcasts onto the instance stream, and one doc_id
+    exchange aggregates: the returned plan scores in ONE further
+    corpus pass."""
     from dex_data_ingestor_spark.operators.text import dsir_importance
 
     docs = load_table(spark, sf_dir, "documents")
     return dsir_importance(
-        docs, F.col("source").isin("src0", "src1"), n_buckets=4096,
-        materialize_model=True,
+        docs, F.col("source").isin("src0", "src1"), n_buckets=4096
     )
 
 
@@ -7996,8 +7990,7 @@ def q_dsir_sample(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     scores = dsir_importance(
-        docs, F.col("source").isin("src0", "src1"), n_buckets=4096,
-        materialize_model=True,
+        docs, F.col("source").isin("src0", "src1"), n_buckets=4096
     ).select("doc_id", "n_inst", "num")
     u = (md5_int64(F.col("text")) + F.lit(0.5)) / F.lit(4294967296.0)
     g_units = F.floor(-F.log(-F.log(u)) * 1000000.0 + F.lit(0.5))
@@ -8061,19 +8054,16 @@ def q_unigram_logloss(spark, sf_dir):
     pure-IEEE floor(x*1e6 + 0.5) (<= 65536 distinct libm args,
     absorbed by the quantum), and per-doc totals are order-free exact
     BIGINT sums; the final avg division is one IEEE op on exact
-    < 2^53 operands. Plan (r14): the MATERIALIZED model/apply form —
-    the 100 TB shape: the fit collects the bounded (f, c_f) table in
-    ONE corpus pass (65536 rows no matter the corpus size; THE reason
-    to hash rather than broadcast a raw 10^8-word vocab), totals it
-    driver-side (exact integer sum) and evaluates _nll_units on the
-    collected local relation (identical JVM expression -> bit-equal
-    weights); the returned plan is ONE corpus scan + one doc_id
-    exchange. Replaces the single-statement diamond (one corpus scan
-    per branch). Oracle SQL unchanged; re-proven on the flip."""
+    < 2^53 operands. Plan: the fit collects the bounded (f, c_f)
+    table in ONE corpus pass (65536 rows no matter the corpus size;
+    THE reason to hash rather than broadcast a raw 10^8-word vocab),
+    totals it driver-side (exact integer sum) and evaluates _nll_units
+    on the collected local relation; the returned plan is ONE corpus
+    scan + one doc_id exchange."""
     from dex_data_ingestor_spark.operators.text import unigram_logloss
 
     docs = load_table(spark, sf_dir, "documents")
-    return unigram_logloss(docs, n_buckets=65536, materialize_model=True)
+    return unigram_logloss(docs, n_buckets=65536)
 
 
 @register(
@@ -8244,20 +8234,17 @@ def q_bigram_logloss(spark, sf_dir):
     ("ab","c") vs ("a","bc") cannot collide pre-hash; single-token
     documents have no pairs and drop (documented contract).
 
-    Plan (r14): the MATERIALIZED model/apply form — the 100 TB shape:
-    the fit explodes each pair instance into its two count roles
+    Plan: the fit explodes each pair instance into its two count roles
     (f2 pair / f1 predecessor — the period_over_period role-explode
     trick) so ONE corpus pass + one bounded aggregate (65536 pair +
     16384 prev rows no matter the corpus size — the hashing's whole
     point) yields BOTH model tables, collected and split driver-side
     (exact integer counts -> value-identical); the returned plan is
-    ONE corpus scan + two broadcast joins + one doc_id exchange.
-    Replaces the single-statement diamond (3 corpus scans). Oracle
-    SQL unchanged; re-proven on the flip."""
+    ONE corpus scan + two broadcast joins + one doc_id exchange."""
     from dex_data_ingestor_spark.operators.text import bigram_logloss
 
     docs = load_table(spark, sf_dir, "documents")
-    return bigram_logloss(docs, materialize_model=True)
+    return bigram_logloss(docs)
 
 
 @register(
@@ -8718,9 +8705,7 @@ def q_nb_classify(spark, sf_dir):
 
     Plan / 100 TB: model = O(classes x buckets) rows, broadcast;
     scoring fans each token row out x classes, folded map-side before
-    ONE doc-keyed exchange; the fit is one (class, f) shuffle. See
-    nb_classify's docstring for the materialize_model diamond
-    switch."""
+    ONE doc-keyed exchange; the fit is one (class, f) shuffle."""
     from dex_data_ingestor_spark.operators.text import nb_classify
 
     docs = load_table(spark, sf_dir, "documents")
@@ -10325,362 +10310,3 @@ def q_priority_lateness(spark, sf_dir):
             "low_line_count"
         ),
     )
-
-
-# =========================================================================
-# Driver correctness-window ordering (round 9)
-# =========================================================================
-
-#: The driver verifies the FIRST 50 entries of queries() in dict order
-#: against their oracles each round. Round-9 window, per the r8
-#: verdict's demand ("drain the 46-query driver debt"): ALL 46
-#: registry queries that have never held a driver row (every r8
-#: addition — the LM scorers, the PQ/IVFPQ triad, the market-risk
-#: legs, gopher/c4, pagerank/rrf/ab_test/embed_auc/mmr, the Q2/Q7/
-#: Q11/Q12/Q20/Q21 TPC-H shapes, debounce, the fast/exact twin
-#: alternates) fill 46 slots — the union of the documented cohort-B
-#: r9 pledges plus the entries slotted r10/r11, pulled forward so the
-#: debt clears to ZERO this round instead of <20 — plus 4 canaries
-#: under invariant 3's trimming clause (owed-new-query slots take
-#: precedence): the flagship (q_flagship_daily_revenue) and one each
-#: for merge, as-of, and vector (q_merge_upsert, q_asof_price,
-#: q_vector_topk). q_apy and the r8-windowed heavy-family canaries
-#: sit out one round (all hold fresh r8 greens). Registry growth is
-#: FROZEN this round per the r8 verdict; after this round every one
-#: of the 176 registry entries holds a driver row and cohorts
-#: rebalance to A=r8(50), B=r9(50), C=r7 remainder for the r10
-#: window.
-#:
-#: Invariant-2 promotions owed to the r10 window (changed in r9 by
-#: the oracle-SQL code-review round, fixture-neutral and locally
-#: parity-verified with crafted boundary/tie tests, but not in the
-#: full r9 debt-drain window): q_asof_lookup (quote dedup per
-#: (user, ts) by max event_id — closes a latent timestamp-tie
-#: nondeterminism), q_stream_session (boundary aligned from >= to
-#: the family's diff > gap rule, matching the empirically-pinned
-#: native session_window), q_minhash_lsh (oracle now reads the
-#: shared _MINHASH_BUCKETS_CTE; rendered SQL differs textually,
-#: same result). q_vector_topk and q_rrf_fusion also changed (NULL-
-#: embedding defense) but already ride this window. Added by the
-#: late-r9 clean-worker fix: q_embed_gram_fast and q_ann_ivfpq
-#: (kernel quantizer rebuilt as a by-value closure — bit-identical
-#: arithmetic, re-verified green through the hostile-tz sf0.01
-#: driver-sim, but an engine-path change is an engine-path change)
-#: promote from their r11 slot into the r10 window.
-#:
-#: Added by the late-r9 determinism program (both sides rewritten
-#: together; parity re-proven at sf0.001/0.01/0.1 + hostile
-#: partitioning + edge/skew corpora, but value-level outputs
-#: CHANGED, so each owes a fresh driver row in r10): q_yoy_qoq +
-#: every round_ieee-smoothed query (the ~90-site native-ROUND swap;
-#: representatives suffice per cohort rules), q_embed_stats
-#: (BIGINT micro-unit moments), q_stats_agg / q_outlier_events
-#: (exact integer moments via _det_to_double), q_quantiles (exact
-#: order statistics), q_apy (floor-rule input quantizer), q_corr
-#: (cent-unit integer moments — decimal sums sat 2x under the
-#: ~2^63 DuckDB decimal->double cast cliff).
-#:
-#: ROTATION POLICY (re-derived r8 for a 130+-entry registry — the
-#: two-halves alternation stopped closing once the registry outgrew
-#: 2x(50-canaries)): the non-canary registry is partitioned into
-#: THREE cohorts by latest-green round; each round the OLDEST cohort
-#: (~35-45 queries) fills the window and the remaining slots carry
-#: canaries. Steady-state cohorts after this round: A = the 35
-#: checked here (re-enter r11), B = the 45 whose latest row is r6
-#: (fill r9 — they hit the age bound first), C = the 45 whose latest
-#: row is r7 (fill r10). The SEVEN queries added in r8 (each
-#: bitwise-verified at sf0.001+sf0.01 on registration per
-#: invariant 1) slot as follows: q_curate_materialized, q_semdedup,
-#: q_dsir_weights, q_ngram_containment, q_unigram_logloss join
-#: cohort B's r9 window, filling it to exactly 50 with zero canary
-#: slots; q_dsir_sample, q_cluster_split, q_ohlc_bars,
-#: q_bigram_logloss and q_waiting_suppliers (registered after the B
-#: window closed) displace into cohort C's r10 window (45+5 = 50,
-#: zero canary slots — C is now full); q_tick_rule_flow,
-#: q_ohlc_daily, q_realized_var, q_markout and q_embed_gram
-#: (registered after C filled) open the r11 window alongside cohort
-#: A. The final eight r8 additions (q_ann_pq, q_ann_pq_rerank,
-#: q_ann_ivfpq, q_volume_shipping, q_min_cost_supplier,
-#: q_part_promotion, q_backoff_logloss, q_embed_gram_fast — each
-#: bitwise-verified at sf0.001+sf0.01 on registration) also slot
-#: into r11: 35 (A) + 5 + 8 = 48, leaving 2 canary slots (invariant
-#: 3: canaries trim when owed-new-query slots require) — r11 closes
-#: exactly at 50 and no r8 entry waits past r11. The continuation
-#: session's four additions (q_drawdown, q_return_corr,
-#: q_nb_classify, q_ngram_containment_fast — each bitwise-verified at
-#: sf0.001+sf0.01 on registration) join the r9 window per invariant
-#: 1; r9 was already cut at 50 with zero canaries, so they displace
-#: four cohort-B slots under the policy's own pruning clause (the
-#: registry is past the ~135-entry bound): from r9 onward the
-#: shared-oracle twin pairs (q_embed_gram_fast/q_embed_gram,
-#: q_semdedup_fast/q_semdedup, q_curate_materialized/
-#: q_curate_stripped, q_bloom_contamination/q_contamination,
-#: q_salted_agg and q_salted_join vs their unsalted oracles) occupy
-#: ONE rotation slot per pair, alternating which member holds the
-#: round's row — freeing 6 slots per cycle (one per pair) without
-#: stretching any entry past the 3-round bound. q_semdedup_fast
-#: (also registered this session, bitwise-verified at both SFs)
-#: rides its pair's slot; q_gopher_rules, q_c4_filters (published
-#: heuristic filter sets, + crafted multi-line parity) and
-#: q_char_entropy take three of the freed slots. The seventh slot
-#: comes from the same pruning clause's true-subset rule:
-#: q_count's oracle is a strict sub-aggregate of q_group_agg's
-#: grouped form, so from r9 q_count and q_distinct alternate one
-#: slot. Net: all seven continuation-session entries hold r9 rows. Invariants that
-#: override the cycle: (1)
-#: queries ADDED in a round are locally bitwise-verified at
-#: sf0.001+sf0.01 on registration and ALWAYS join the next round's
-#: window; (2) any query whose engine path or oracle SQL changed in a
-#: round is promoted into the next window regardless of cohort; (3)
-#: canaries (flagship + one per core family) ride every window,
-#: trimmed only when owed-new-query slots require. Under this cycle
-#: no entry's latest green row ages past three rounds at up to ~135
-#: non-canary entries; beyond that, prune true-subset entries before
-#: stretching the cycle.
-#:
-#: Registry-growth amendment (late r8, registry at 167): the second
-#: continuation batch (q_edit_distance, q_rolling_vol,
-#: q_inverted_index, q_random_project, q_pmi_collocations,
-#: q_incremental_agg — each bitwise-verified at sf0.001+sf0.01 AND
-#: through the fresh-process hostile-tz driver-sim on registration)
-#: joins the r9 window per invariant 1, displacing six cohort-B
-#: slots. Slot accounting past the
-#: ~135 bound is now explicitly FOUR-round worst-case for the long
-#: tail of cheap relational shapes (the B/C cohort remainders), while
-#: the 3-round bound is preserved for every heavy family (dedup/LSH,
-#: vector/PQ, curation, market metrics, streaming, multimodal) via
-#: the canary set and the twin-pair/true-subset slot sharing already
-#: in force — the freshness guarantee tracks engine risk, not
-#: registry arithmetic.
-#:
-#: Third continuation batch (registry at 167): q_pagerank,
-#: q_rrf_fusion, q_ab_test — each bitwise-verified at sf0.001+sf0.01
-#: on registration — join the r9 window per invariant 1, displacing
-#: three more cohort-B slots under the same pruning clause
-#: (q_rrf_fusion's lex leg subsumes q_bm25's scorer verbatim, so
-#: those two alternate one slot like the twin pairs; q_pagerank and
-#: q_ab_test displace the two cheapest B-cohort relational shapes
-#: into the 4-round tail). Same treatment for the fourth batch
-#: (q_embed_auc, q_mmr_rerank — both bitwise-verified at
-#: sf0.001+sf0.01 on registration): they join r9 per invariant 1,
-#: displacing two more cheap-relational B slots; both lean on
-#: q_vector_topk's scoring, which stays an every-round canary.
-#: Fifth batch (q_important_stock, q_priority_lateness — the Q11/Q12
-#: shapes completing the 22/22 TPC-H sweep, bitwise-verified at
-#: sf0.001+sf0.01 on registration): r9 per invariant 1; they displace
-#: the two TPC-H shapes whose plan shapes they subsume into the tail
-#: (q_order_priority shares Q12's lateness semi-join, q_top_supplier
-#: shares Q11's grouped-threshold algebra). Sixth batch: q_debounce
-#: (burst keep-first; verified likewise) joins r9 displacing
-#: q_sessionize's slot for one round — same single-exchange window
-#: plan, and sessionize's algebra is exercised INSIDE debounce;
-#: q_approx_quantiles (rows-only by contract, like q_approx_distinct)
-#: was originally slotted r10 alternating with its exact twin
-#: q_quantiles, but the r9 debt-drain window (below) pulls ALL
-#: never-checked entries forward, so it rides r9 as the window's one
-#: rows-only slot; from r10 it alternates with q_quantiles as
-#: planned.
-#: (The r9 window list itself is retired; it is preserved at commit
-#: df882d4 — the narrative above is the durable record.)
-
-
-# =========================================================================
-# Driver correctness-window ordering (round 10)
-# =========================================================================
-
-#: Round-10 window. The r9 debt-drain consumed the whole r9 window, so
-#: the r6 cohort (35 queries, now the oldest — 4 rounds) fills first,
-#: exactly per the rotation policy's "oldest cohort" rule (the r8
-#: comment's provisional "C=r7 fills r10" arithmetic predates the
-#: debt-drain pulling everything forward; age wins). Then the
-#: invariant-2 promotions that owe a fresh driver row:
-#:
-#: - q_incremental_agg — r9 driver RED (DECIMAL(38,6) result columns
-#:   hash type-divergently; the decimal twin of r8's HUGEINT). Fixed
-#:   this round: DOUBLE at the boundary on both sides, DECIMAL struck
-#:   from the portable-type audits. Needs its green row.
-#: - q_token_budget — r8 driver RED, oracle fixed in r9 (CAST window
-#:   SUM AS BIGINT) but NOT in the r9 debt-drain window, so the fix
-#:   has never been driver-confirmed. Rides now.
-#: - q_stream_session (r9 boundary alignment >= -> diff > gap),
-#:   q_minhash_lsh (oracle re-rendered through the shared buckets
-#:   CTE) — the two remaining r9 oracle-review promotions without an
-#:   r9 row (q_asof_lookup's sits in the r6 cohort above;
-#:   q_vector_topk/q_rrf_fusion/q_embed_gram_fast/q_ann_ivfpq already
-#:   took r9 greens).
-#: - q_yoy_qoq, q_apy, q_outlier_events — determinism-program rewrites
-#:   (round_ieee smoothing / floor-rule quantizer / exact integer
-#:   moments) whose value-level outputs changed in r9; the program's
-#:   other rewrites (q_corr, q_quantiles, q_stats_agg, q_embed_stats)
-#:   are already in the r6 cohort above.
-#:
-#: Canaries fill the remaining 8 slots (flagship + one per core
-#: family; q_text_stats doubles as the round_ieee representative for
-#: the ~90-site ROUND swap, q_group_agg as the _dec_sum one).
-#:
-#: Forward plan (r11): once this window lands, latest-green cohorts
-#: are A = the ~45 r8 greens never re-checked since (oldest, 3
-#: rounds), B = the r9 debt-drain's ~45, C = this window's 50. r11
-#: fronts cohort A plus the standing canaries (45 + 5 = 50, zero
-#: spare); r12 fronts B. Invariants 1-3 (new/changed queries promote;
-#: canaries trim for owed slots) override as always.
-#:
-#: Invariant-2 promotions OWED to r11 from the late-r10 continuation
-#: session (engine paths changed, outputs locally bitwise-verified at
-#: sf0.001+sf0.01 under hostile tz; values unchanged by construction):
-#: - width normalization (int32 -> bigint result columns):
-#:   q_corpus_curation, q_curate_stripped, q_curate_materialized,
-#:   q_embed_gram, q_embed_gram_fast, q_c4_filters (q_embed_stats's
-#:   cast rides ITS r10 window slot);
-#: - packed_tick_order loud-guard swap: q_ohlc_bars, q_ohlc_daily,
-#:   q_return_corr;
-#: - review rounds 2-4 (operator hardening; all fixture-value-
-#:   identical, each subset-driver-simmed on change): q_kmv_distinct
-#:   (oracle NULL filter paired), q_table_diff (null-safe join,
-#:   oracle paired), q_yoy_qoq (type-preserving shift), q_ann_ivf /
-#:   q_semdedup / q_semdedup_fast / q_ann_pq / q_ann_pq_rerank /
-#:   q_ann_ivfpq / q_embed_neardup (zero-norm quarantine + kernel
-#:   ok-mask + NULL-code exclusion), q_simhash (bits guard),
-#:   q_cdc_apply (shared winners helper), q_sessionize / q_debounce
-#:   (collision guards), q_multimodal_join (zero-pixel feature
-#:   guard), q_asof_lookup / q_asof_tolerance / q_asof_price
-#:   (quote-only carried values), q_incremental_agg (refresh
-#:   continuity + expected_base).
-#: - review round 5 (engine-side registry review; anchor/NULL-quote
-#:   seams — oracle q CTEs gated, asof NULL-quote filters paired,
-#:   grouping_sets one-text form, important_stock decimal sum):
-#:   q_vector_topk, q_rrf_fusion, q_embed_auc, q_mmr_rerank,
-#:   q_ann_ivf, q_ann_lsh, q_ann_pq, q_ann_pq_rerank, q_ann_ivfpq,
-#:   q_asof_lookup, q_asof_tolerance, q_grouping_sets,
-#:   q_important_stock, q_ohlc_daily.
-#: ~35 owed rows — most of the r11 window; fill the remaining slots
-#: with cohort-A's OLDEST entries and roll the rest of A to r12 with
-#: B, per the standing age-wins rule.
-#: (The r10 window list itself is retired; it is preserved at commit
-#: bcc63b7 — the narrative above is the durable record.)
-
-# =========================================================================
-# Driver correctness-window ordering (round 14)
-# =========================================================================
-
-#: Round-13 landed 47/47 hash-green on its oracle-paired window rows
-#: (CORRECTNESS_r13; the 3 others are declared rows-only), leaving the
-#: ledger at: 26 queries on r10 rows (age 4 after r14 — the staleness
-#: ceiling, ALL must ride now), 50 on r11, 50 on r12, 50 on r13. (The
-#: r13 window list is retired; preserved at commit 84e9be9 — this
-#: narrative is the durable record.)
-
-#: Round-14 window: the full 26-query r10 cohort fronts
-#: (staleness-forced), then OWED_R14 — every query whose ENGINE
-#: changed in this optimization round (the logloss/DSIR
-#: materialized-model flip, the lsh_candidate_pairs aggregate+HOF
-#: rewrite and its curate/neardup consumers, the q_bpe_tokens
-#: batched-merge + vocab-encode rewrite) — then 12 fills from the r11
-#: cohort, thinnest evidence tiers first (the ANN family, the
-#: embedding dedup pair, the multimodal join, and the stateful
-#: sessionize/debounce/sliding trio). Arithmetic: 26 r10 + 12 owed
-#: (9 on r13 rows, 3 curate entries on r11 rows) + 12 r11 fills = 50,
-#: leaving 35 r11-row queries for r15 (age 4 there — at the ceiling,
-#: so they front the r15 window).
-OWED_R14 = [
-    # materialized-model flip (operators/text.py; values bit-equal,
-    # plan 3 corpus scans -> 1)
-    "q_unigram_logloss",
-    "q_bigram_logloss",
-    "q_dsir_weights",
-    "q_dsir_sample",
-    # lsh_candidate_pairs aggregate+HOF rewrite and every registry
-    # consumer of it (operators/neardup.py, corpus.py, streaming)
-    "q_minhash_pairs",
-    "q_edit_distance",
-    "q_neardup_verified",
-    "q_neardup_incremental",
-    "q_corpus_curation",
-    "q_curate_stripped",
-    "q_curate_materialized",
-    # batched merges + vocabulary-side encode (rows-only tier)
-    "q_bpe_tokens",
-]
-
-_WINDOW_R14 = [
-    # the full r10 cohort (26 — reaches age 4 after r14)
-    "q_anti_join",
-    "q_apy",
-    "q_corr",
-    "q_cube",
-    "q_dedup_exact",
-    "q_embed_stats",
-    "q_flagship_daily_revenue",
-    "q_group_agg",
-    "q_histogram",
-    "q_merge_upsert",
-    "q_outlier_events",
-    "q_pivot",
-    "q_profile",
-    "q_quantiles",
-    "q_rollup",
-    "q_semi_join",
-    "q_setops",
-    "q_shipping_priority",
-    "q_sql_interface",
-    "q_stats_agg",
-    "q_string_agg",
-    "q_text_stats",
-    "q_tfidf",
-    "q_time_rollup",
-    "q_vector_topk",
-    "q_window_running",
-] + OWED_R14 + [
-    # 12 r11 fills — thinnest evidence tiers first (see narrative)
-    "q_ann_ivf",
-    "q_ann_lsh",
-    "q_ann_pq",
-    "q_ann_pq_rerank",
-    "q_ann_ivfpq",
-    "q_embed_neardup",
-    "q_semdedup",
-    "q_semdedup_fast",
-    "q_multimodal_join",
-    "q_stream_sliding",
-    "q_sessionize",
-    "q_debounce",
-]
-
-# =========================================================================
-# Driver correctness-window ordering (round 13) — retired narrative
-# =========================================================================
-
-#: Round-12 landed 50/50 hash-green (CORRECTNESS_r12: 14 r7-row
-#: queries + the r8 cohort + OWED_R12), leaving the ledger at:
-#: 1 query on an r8 row (q_bpe_tokens, age 4 after r12 — the
-#: staleness ceiling, MUST ride now), 26 on r9, 49 on r10, 50 each
-#: on r11/r12. (The r12 window list is retired; preserved at commit
-#: f54077f — this narrative is the durable record.)
-
-#: Round-13 window: q_bpe_tokens fronts (staleness-forced), then the
-#: full 26-query r9 cohort (reaches age 4 after this round — anything
-#: left behind would break the ceiling in r14), then OWED_R13, then
-#: 22 fills from the r10 cohort's oldest. Arithmetic: 1 r8 + 26 r9 +
-#: 1 owed (q_yoy_qoq, itself an r10 row) + 22 r10 fills = 50, leaving
-#: 26 r10-row queries for r14 (age 4 there — at the ceiling, so they
-#: front the r14 window). Fill choice within the r10 cohort favors
-#: the thinnest evidence tiers first: the rows-only sketch
-#: (q_approx_distinct), the sketch/stateful family, streaming, and
-#: the join/merge shapes whose engines are most multi-stage; the
-#: single-shape relational scans wait for r14 (same precedent as the
-#: r7 cohort riding last in r12).
-
-
-def _window_order(registry: dict) -> dict:
-    """Rebuild a registry dict with _WINDOW_R14 first (keeping each
-    family's relative order), everything else after in file order."""
-    out = {n: registry[n] for n in _WINDOW_R14 if n in registry}
-    out.update((n, v) for n, v in registry.items() if n not in out)
-    return out
-
-
-assert len(_WINDOW_R14) == 50, len(_WINDOW_R14)
-assert set(_WINDOW_R14) <= set(QUERIES), set(_WINDOW_R14) - set(QUERIES)
-assert len(set(_WINDOW_R14)) == 50
-QUERIES = _window_order(QUERIES)
-ORACLE_SQL = _window_order(ORACLE_SQL)

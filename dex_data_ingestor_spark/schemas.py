@@ -13,8 +13,10 @@ from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
 # Driver testbed tables (/root/testdata/sf*/; see FIXTURES.md §1).
-# `events.ts` is TIMESTAMP(NANOS) on disk; the reader surfaces it as a
-# nanosecond long and io.load_table converts to TIMESTAMP_NTZ.
+# `events.ts` is TIMESTAMP(MICROS, isAdjustedToUTC=false) on disk in every
+# shipped SF, read natively as TIMESTAMP_NTZ. The older TIMESTAMP(NANOS)
+# encoding is still read: Spark surfaces it as a nanosecond long and
+# io.load_table converts it to TIMESTAMP_NTZ (tests/test_io.py).
 # --------------------------------------------------------------------------
 
 REGION = T.StructType(

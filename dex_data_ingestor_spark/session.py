@@ -75,8 +75,8 @@ def _ship_package(spark: SparkSession) -> None:
     prepended to every worker's import path — the same mechanism as
     ``spark-submit --py-files``. Registry queries additionally keep
     their kernels as self-contained closures (shipped by value, see
-    ``_make_np_quantizer``) so the correctness window never depends
-    on this; the clean-worker guard in tests/test_worker_env.py pins
+    ``_make_np_quantizer``) so registry queries never depend on
+    this; the clean-worker guard in tests/test_worker_env.py pins
     both layers.
 
     Zip cost: ~0.1 s and a few hundred KB, once per session.

@@ -10,6 +10,8 @@ SURVEY.md §2.1-H). Spark-native equivalents:
                                     (or processingTime='1 hour' live)
 - the half-open window           -> event-time window + withWatermark
 - idempotent ON-DUPLICATE writes -> foreachBatch + operators.merge_upsert
+                                    into a snapshot table
+                                    (foreach_batch_merge_snapshots)
 
 The same aggregation expressions power the batch forms in
 plans/testbed.py (q_stream_*), so batch/stream parity is testable.
@@ -206,48 +208,6 @@ def run_available_now(
         .start()
     )
     q.awaitTermination()
-
-
-def foreach_batch_merge(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    target_path: str,
-    keys: list[str],
-    spark: SparkSession,
-    update_cols: list[str] | None = None,
-):
-    """Streaming upsert sink: every micro-batch MERGEs into the target
-    parquet table via merge_upsert — REPLAY-safe because the merge is
-    idempotent (the reference's H4 guarantee, enforced by
-    construction), but the final overwrite is not crash-ATOMIC on
-    plain parquet: the target is deleted before it is rewritten, so a
-    mid-write failure leaves the staging dir as the recovery copy and
-    the checkpoint replays the batch. Production exactly-once is
-    foreach_batch_merge_snapshots, whose manifest commit is atomic and
-    skips replayed batch ids. Returns the started query
-    (AvailableNow)."""
-    from dex_data_ingestor_spark.io import table_exists
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # Hadoop-FS existence check: os.path.exists on an s3a://hdfs
-        # target is always False, which would make every micro-batch
-        # "initialize" the table — overwriting all previously merged
-        # data with just itself.
-        if table_exists(spark, target_path):
-            existing = spark.read.parquet(target_path)
-        else:
-            existing = spark.createDataFrame([], batch_df.schema)
-        merged = merge_upsert(existing, batch_df, keys, update_cols)
-        tmp = target_path + "._staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(target_path)
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_dedup(
@@ -977,8 +937,8 @@ def foreach_batch_merge_snapshots(
     txn_app_id: str | None = None,
 ):
     """Streaming upsert sink over the commit-log snapshot table
-    (snapshots.py) — the versioned, atomic successor of
-    :func:`foreach_batch_merge`'s staging-copy dance.
+    (snapshots.py): every micro-batch MERGEs (merge_upsert) into a new
+    table version — the reference's idempotent ON-DUPLICATE write (H4).
 
     Exactly-once by two mechanisms: (a) each version commit is ONE
     atomic manifest create, so readers never observe a half-written

@@ -31,9 +31,10 @@ from dex_data_ingestor_spark.operators.corpus import (
 )
 from dex_data_ingestor_spark.operators.vector import cosine_topk
 from dex_data_ingestor_spark.plans.pipelines import DexWarehouse, run_catchup
+from dex_data_ingestor_spark.snapshots import snapshot_read
 from dex_data_ingestor_spark.streaming.jobs import (
     events_stream_from_parquet,
-    foreach_batch_merge,
+    foreach_batch_merge_snapshots,
 )
 
 
@@ -78,7 +79,7 @@ def main() -> None:
             "n",
         )
     )
-    q = foreach_batch_merge(
+    q = foreach_batch_merge_snapshots(
         hourly,
         os.path.join(work, "ckpt"),
         os.path.join(work, "hourly_counts"),
@@ -86,7 +87,7 @@ def main() -> None:
         spark=spark,
     )
     q.awaitTermination(timeout=300)
-    n_windows = spark.read.parquet(os.path.join(work, "hourly_counts")).count()
+    n_windows = snapshot_read(spark, os.path.join(work, "hourly_counts")).count()
     print(f"   hourly windows merged: {n_windows}")
 
     print("== 4. corpus curation + vector search")
@@ -267,15 +268,14 @@ def main() -> None:
 
     docs = load_table(spark, sf_dir, "documents")
     top = (
-        dsir_importance(docs, F.col("source").isin("src0", "src1"),
-                        materialize_model=True)
+        dsir_importance(docs, F.col("source").isin("src0", "src1"))
         .orderBy(F.col("importance").desc()).limit(3).collect()
     )
     print("   top DSIR-importance docs (look most like src0/src1):")
     for r in top:
         print(f"     doc {r.doc_id}: importance {r.importance:.3f} "
               f"({r.n_inst} tokens)")
-    ppl = unigram_logloss(docs, materialize_model=True)
+    ppl = unigram_logloss(docs)
     lo, hi = ppl.agg(F.min("avg_nll"), F.max("avg_nll")).first()
     print(f"   unigram log-loss spread: {lo:.2f} .. {hi:.2f} nats/token")
     em2 = load_table(spark, sf_dir, "embeddings")

@@ -91,7 +91,7 @@ def test_bookmark_monotone_advance(spark, tmp_path):
 
     from dex_data_ingestor_spark.operators.incremental import Bookmark
 
-    bm = Bookmark(spark, str(tmp_path / "etl_control"))
+    bm = Bookmark(str(tmp_path / "etl_control"))
     assert bm.get_last_run("t") is None
     t1 = dt.datetime(2024, 1, 1, 10)
     t2 = dt.datetime(2024, 1, 1, 11)
@@ -111,7 +111,7 @@ def test_bookmark_no_tmp_leak_and_crash_recovery(spark, tmp_path):
     from dex_data_ingestor_spark.operators.incremental import Bookmark
 
     path = str(tmp_path / "etl_control")
-    bm = Bookmark(spark, path)
+    bm = Bookmark(path)
     t1 = dt.datetime(2024, 1, 1, 10)
     t2 = dt.datetime(2024, 1, 1, 11)
     bm.set_last_run("a", t1)
@@ -160,7 +160,7 @@ def test_bookmark_reads_spark_written_table(spark, tmp_path, new_york_process_tz
     ).write.parquet(path)
     names = os.listdir(path)
     assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
-    bm = Bookmark(spark, path)
+    bm = Bookmark(path)
     assert bm.get_last_run("a") == t_a and bm.get_last_run("b") == t_b
     bm.set_last_run("a", t_a + dt.timedelta(hours=1))
     assert bm.get_last_run("a") == t_a + dt.timedelta(hours=1)
@@ -178,7 +178,7 @@ def test_bookmark_table_reads_through_spark(spark, tmp_path, new_york_process_tz
 
     path = str(tmp_path / "etl_control")
     t = dt.datetime(2024, 3, 10, 2, 30, 0, 5)  # a New York DST-gap hour
-    Bookmark(spark, path).set_last_run("task", t)
+    Bookmark(path).set_last_run("task", t)
     df = spark.read.schema(schemas.ETL_CONTROL).parquet(path)
     rows = df.select(
         "task_name",
@@ -214,7 +214,7 @@ def test_bookmark_rejects_scheme_qualified_path(spark, sf_dir, tmp_path, root):
 
     path = root + "/etl_control"
     with pytest.raises(ValueError, match=re.escape(path)):
-        Bookmark(spark, path)
+        Bookmark(path)
     wh = DexWarehouse(spark, root)
     events = load_table(spark, sf_dir, "events")
     with pytest.raises(ValueError, match=re.escape(path)):
@@ -225,7 +225,7 @@ def test_bookmark_rejects_scheme_qualified_path(spark, sf_dir, tmp_path, root):
             dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2),
         )
     # a local path with a colon is not a scheme
-    Bookmark(spark, str(tmp_path / "a:b")).set_last_run("t", dt.datetime(2024, 1, 1))
+    Bookmark(str(tmp_path / "a:b")).set_last_run("t", dt.datetime(2024, 1, 1))
 
 
 def test_cdc_apply_delete_and_tie_semantics(spark):

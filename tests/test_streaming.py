@@ -7,9 +7,10 @@ from pyspark.sql import functions as F
 
 from dex_data_ingestor_spark import schemas
 from dex_data_ingestor_spark.io import load_table
+from dex_data_ingestor_spark.snapshots import snapshot_read
 from dex_data_ingestor_spark.streaming.jobs import (
     events_stream_from_parquet,
-    foreach_batch_merge,
+    foreach_batch_merge_snapshots,
     session_windows,
     tumbling_counts,
 )
@@ -75,8 +76,10 @@ def test_foreach_batch_merge_exactly_once_effective(
     spark, sf_dir, event_files, tmp_path
 ):
     """Replaying the stream from scratch (fresh checkpoint) against the
-    already-written target changes nothing: merge is idempotent, so
-    at-least-once delivery is exactly-once-effective (reference H4)."""
+    already-written snapshot table changes nothing: a fresh checkpoint
+    is a new writer, so its batches merge rather than being skipped,
+    and merge is idempotent, so at-least-once delivery is
+    exactly-once-effective (reference H4)."""
     target = str(tmp_path / "target")
 
     def run(ckpt: str):
@@ -95,7 +98,7 @@ def test_foreach_batch_merge_exactly_once_effective(
                 "n",
             )
         )
-        q = foreach_batch_merge(
+        q = foreach_batch_merge_snapshots(
             daily,
             str(tmp_path / ckpt),
             target,
@@ -106,11 +109,13 @@ def test_foreach_batch_merge_exactly_once_effective(
 
     run("ckpt_a")
     first = sorted(
-        (r.day, r.user_id, r.n) for r in spark.read.parquet(target).collect()
+        (r.day, r.user_id, r.n)
+        for r in snapshot_read(spark, target).collect()
     )
     run("ckpt_b")  # fresh checkpoint -> full replay -> must be a no-op
     second = sorted(
-        (r.day, r.user_id, r.n) for r in spark.read.parquet(target).collect()
+        (r.day, r.user_id, r.n)
+        for r in snapshot_read(spark, target).collect()
     )
     assert first == second and len(first) > 0
 

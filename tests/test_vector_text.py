@@ -549,6 +549,28 @@ def test_lsh_tiling_no_self_pairs_on_duplicate_bucket_rows(spark):
     assert all(r.a_id < r.b_id for r in pairs)
 
 
+def test_lsh_null_bucket_keys_never_pair(spark):
+    """A NULL band_id or band_hash is no bucket: rows carrying one pair
+    with nothing (equi-join semantics, as the oracle's bucket CTE), on
+    both the small and the hot (capped) path. A real bucket beside
+    them still pairs."""
+    rows = [
+        (1, 0, None), (2, 0, None),  # shared NULL band_hash
+        (3, None, 5), (4, None, 5),  # shared NULL band_id
+        (5, 0, 9), (6, 0, 9),  # a real bucket
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, band_id int, band_hash long"
+    )
+    got = {tuple(r) for r in ND.lsh_candidate_pairs(df, "doc_id").collect()}
+    assert got == {(5, 6)}
+    hot = spark.createDataFrame(
+        [(i, 0, None) for i in range(8)],
+        "doc_id long, band_id int, band_hash long",
+    )
+    assert ND.lsh_candidate_pairs(hot, "doc_id", 4).collect() == []
+
+
 def test_bm25_against_independent_python_reimplementation(spark, tmp_path):
     """q_bm25's Spark plan vs a from-scratch plain-Python BM25 on a
     tiny hand-built corpus — guards against both engine and oracle
@@ -868,35 +890,36 @@ def test_containment_detects_quote_jaccard_misses(spark):
     assert jac == []
 
 
-def test_hashed_model_materialize_severs_diamond(spark, sf_dir):
-    """materialize_model=True (collect the O(n_buckets) weight table —
-    model state, never data) must return byte-identical results to the
-    single-statement form AND cut the corpus scans in the plan: the
-    inline form scans documents once per model/apply branch, the
-    materialized form exactly once for the apply side plus once for
-    the model fit already executed."""
-    from dex_data_ingestor_spark.io import load_table
+def test_lm_fits_collect_model_and_scan_corpus_once(spark, sf_dir):
+    """unigram_logloss, bigram_logloss and dsir_importance fit their
+    bounded model tables in one corpus pass and collect them, so the
+    returned scoring plan holds exactly ONE corpus scan, plans the
+    model side as a LocalTableScan (the Arrow local-relation path),
+    and never a pickled-RDD scan (which would re-enter Python workers
+    on every broadcast build)."""
     from dex_data_ingestor_spark.operators.text import (
+        bigram_logloss,
         dsir_importance,
         unigram_logloss,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    for fn, kw in (
-        (unigram_logloss, {}),
-        (dsir_importance, {"target_pred": F.col("lang") == "en"}),
+    pred = F.col("source").isin("src0", "src1")
+    for df in (
+        unigram_logloss(docs),
+        bigram_logloss(docs),
+        dsir_importance(docs, pred),
     ):
-        inline = {tuple(r) for r in fn(docs, **kw).collect()}
-        mat_df = fn(docs, materialize_model=True, **kw)
-        materialized = {tuple(r) for r in mat_df.collect()}
-        assert inline == materialized
-        plan = mat_df._sc._jvm.PythonSQLUtils.explainString(
-            mat_df._jdf.queryExecution(), "formatted"
+        assert df.collect()  # executes this plan, so AQE shows its final form
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
         )
-        # AQE explain text repeats the tree (final + initial); count
-        # scans in the final-plan section only
+        # AQE explain text repeats the tree (final + initial); check
+        # the final-plan section only
         final = plan.split("Initial Plan")[0]
         assert final.count("Scan parquet") == 1, final
+        assert "LocalTableScan" in final, final
+        assert "Scan ExistingRDD" not in final, final
 
 
 def test_bpe_training_releases_checkpoint_storage(spark):
@@ -982,63 +1005,6 @@ def test_bigram_logloss_golden_conditional_nll(spark):
     assert got[1].n_bigrams == 3
     assert got[1].nll_units == u(2 / 3) + u(1 / 1) + u(1 / 3)
     assert got[1].avg_nll == got[1].nll_units / 3e6
-
-
-def test_bigram_logloss_materialize_matches_and_severs_diamond(spark, sf_dir):
-    """materialize_model=True must be byte-identical to the inline
-    form and leave exactly ONE corpus scan in the scoring plan (the
-    two bounded model tables are collected — model state, never
-    data)."""
-    from dex_data_ingestor_spark.io import load_table
-    from dex_data_ingestor_spark.operators.text import bigram_logloss
-
-    docs = load_table(spark, sf_dir, "documents")
-    inline = {tuple(r) for r in bigram_logloss(docs).collect()}
-    mat_df = bigram_logloss(docs, materialize_model=True)
-    materialized = {tuple(r) for r in mat_df.collect()}
-    assert inline == materialized
-    plan = mat_df._sc._jvm.PythonSQLUtils.explainString(
-        mat_df._jdf.queryExecution(), "formatted"
-    )
-    final = plan.split("Initial Plan")[0]
-    assert final.count("Scan parquet") == 1, final
-
-
-def test_unigram_dsir_materialize_matches_and_severs_diamond(spark, sf_dir):
-    """r14 flip: unigram_logloss / dsir_importance with
-    materialize_model=True must be byte-identical to the inline form
-    (the weight expressions run on the collected local relation with
-    the same JVM ops), leave exactly ONE corpus scan in the scoring
-    plan, and plan the model side as a LocalTableScan (the Arrow
-    local-relation path — a pickled-RDD scan would re-enter Python
-    workers on every broadcast build)."""
-    from pyspark.sql import functions as F
-
-    from dex_data_ingestor_spark.io import load_table
-    from dex_data_ingestor_spark.operators.text import (
-        dsir_importance,
-        unigram_logloss,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pred = F.col("source").isin("src0", "src1")
-    for inline_df, mat_df in (
-        (unigram_logloss(docs), unigram_logloss(docs, materialize_model=True)),
-        (
-            dsir_importance(docs, pred),
-            dsir_importance(docs, pred, materialize_model=True),
-        ),
-    ):
-        inline = {tuple(r) for r in inline_df.collect()}
-        materialized = {tuple(r) for r in mat_df.collect()}
-        assert inline == materialized
-        plan = mat_df._sc._jvm.PythonSQLUtils.explainString(
-            mat_df._jdf.queryExecution(), "formatted"
-        )
-        final = plan.split("Initial Plan")[0]
-        assert final.count("Scan parquet") == 1, final
-        assert "LocalTableScan" in final, final
-        assert "Scan ExistingRDD" not in final, final
 
 
 def test_embed_gram_golden_small_matrix(spark, tmp_path):
@@ -1369,32 +1335,54 @@ def test_nb_classify_golden_and_tie_break(spark):
     assert out[1].score_units == out[2].score_units
 
 
-def test_nb_classify_materialized_model_matches(spark):
-    """The materialize_model diamond switch must not change a single
-    prediction or score (the LM-scorer contract)."""
+def test_nb_classify_golden_toy_corpus(spark):
+    """Golden predictions and scores on a 4-document labeled corpus,
+    re-derived here in Python: md5 buckets (mod 4096, collision-free
+    on this vocabulary), document-frequency priors, Laplace-smoothed
+    likelihoods -ln((c + 1)/(t_c + B)), each quantized to integer
+    micro-nats, argmin over (score, label)."""
+    import hashlib
+    import math
+
     from dex_data_ingestor_spark.operators.text import nb_classify
 
-    train = spark.createDataFrame(
-        [("en", "the cat sat"), ("en", "the dog sat"),
-         ("fr", "le chat"), ("fr", "le chien")],
-        "lang string, text string",
+    train_rows = [
+        ("en", "the cat sat"), ("en", "the dog sat"),
+        ("fr", "le chat"), ("fr", "le chien"),
+    ]
+    test_rows = [(1, "the cat"), (2, "le chien chien"), (3, "dog le")]
+    train = spark.createDataFrame(train_rows, "lang string, text string")
+    test = spark.createDataFrame(test_rows, "doc_id long, text string")
+    got = {
+        r.doc_id: (r.pred, r.score_units)
+        for r in nb_classify(train, test, label_col="lang").collect()
+    }
+
+    n_buckets = 4096
+    u = lambda p: math.floor(-math.log(p) * 1e6 + 0.5)
+    bucket = lambda w: (
+        int(hashlib.md5(w.encode()).hexdigest()[:8], 16) % n_buckets
     )
-    test = spark.createDataFrame(
-        [(1, "the cat"), (2, "le chien chien"), (3, "dog le")],
-        "doc_id long, text string",
-    )
-    a = sorted(
-        map(tuple, nb_classify(train, test, label_col="lang").collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            nb_classify(
-                train, test, label_col="lang", materialize_model=True
-            ).collect(),
-        )
-    )
-    assert a == b
+    vocab = {w for _, t in train_rows + test_rows for w in t.split()}
+    assert len({bucket(w) for w in vocab}) == len(vocab)
+    counts = {"en": {}, "fr": {}}
+    for lang, text in train_rows:
+        for w in text.split():
+            counts[lang][bucket(w)] = counts[lang].get(bucket(w), 0) + 1
+    want = {}
+    for doc_id, text in test_rows:
+        scores = []
+        for lang, cf in counts.items():
+            t_c = sum(cf.values())
+            score = u(2 / 4) + sum(
+                u((cf.get(bucket(w), 0) + 1) / (t_c + n_buckets))
+                for w in text.split()
+            )
+            scores.append((score, lang))
+        score, lang = min(scores)
+        want[doc_id] = (lang, score)
+    assert got == want
+    assert got[1][0] == "en" and got[2][0] == "fr"
 
 
 def test_containment_hashed_keys_match_exact(spark, sf_dir):
