@@ -890,36 +890,76 @@ def test_containment_detects_quote_jaccard_misses(spark):
     assert jac == []
 
 
-def test_lm_fits_collect_model_and_scan_corpus_once(spark, sf_dir):
-    """unigram_logloss, bigram_logloss and dsir_importance fit their
-    bounded model tables in one corpus pass and collect them, so the
-    returned scoring plan holds exactly ONE corpus scan, plans the
-    model side as a LocalTableScan (the Arrow local-relation path),
-    and never a pickled-RDD scan (which would re-enter Python workers
-    on every broadcast build)."""
+def _assert_collected_model_one_corpus_scan(df):
+    """The scoring plan of an LM fit: ONE corpus scan, the collected
+    model side planned as a LocalTableScan (the Arrow local-relation
+    path), never a pickled-RDD scan (which would re-enter Python
+    workers on every broadcast build). Call after ``df`` has run, so
+    AQE shows its final form."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    # AQE explain text repeats the tree (final + initial); check the
+    # final-plan section only
+    final = plan.split("Initial Plan")[0]
+    assert final.count("Scan parquet") == 1, final
+    assert "LocalTableScan" in final, final
+    assert "Scan ExistingRDD" not in final, final
+
+
+def _lm_oracle_problems(spark, sf_dir, name):
+    """Run registry query ``name`` against its DuckDB oracle; return
+    the query's DataFrame (now executed) and the mismatch list."""
+    from dex_data_ingestor_spark.plans.testbed import ORACLE_SQL, QUERIES
+    from tests.oracle_check import compare, duck_connection
+
+    df = QUERIES[name](spark, sf_dir)
+    con = duck_connection(sf_dir)
+    try:
+        return df, compare(df, con, ORACLE_SQL[name])
+    finally:
+        con.close()
+
+
+def test_hashed_model_materialize_severs_diamond(spark, sf_dir):
+    """unigram_logloss and dsir_importance collect their bounded
+    hashed-feature weight table (model state, never data) in one
+    corpus pass, so the model/apply diamond is severed: the returned
+    scoring plan scans the corpus exactly once, also for a target
+    slice other than the registry's."""
     from dex_data_ingestor_spark.operators.text import (
-        bigram_logloss,
         dsir_importance,
         unigram_logloss,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    pred = F.col("source").isin("src0", "src1")
     for df in (
         unigram_logloss(docs),
-        bigram_logloss(docs),
-        dsir_importance(docs, pred),
+        dsir_importance(docs, F.col("lang") == "en"),
     ):
-        assert df.collect()  # executes this plan, so AQE shows its final form
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        # AQE explain text repeats the tree (final + initial); check
-        # the final-plan section only
-        final = plan.split("Initial Plan")[0]
-        assert final.count("Scan parquet") == 1, final
-        assert "LocalTableScan" in final, final
-        assert "Scan ExistingRDD" not in final, final
+        assert df.collect()
+        _assert_collected_model_one_corpus_scan(df)
+
+
+def test_bigram_logloss_materialize_matches_and_severs_diamond(spark, sf_dir):
+    """bigram_logloss with its two bounded model tables collected
+    matches the DuckDB oracle bit for bit and leaves exactly ONE
+    corpus scan in the scoring plan."""
+    df, problems = _lm_oracle_problems(spark, sf_dir, "q_bigram_logloss")
+    assert not problems, " | ".join(problems)
+    _assert_collected_model_one_corpus_scan(df)
+
+
+def test_unigram_dsir_materialize_matches_and_severs_diamond(spark, sf_dir):
+    """unigram_logloss / dsir_importance with the collected model
+    match the DuckDB oracle bit for bit (the weight expressions run on
+    the collected local relation with the same JVM ops), leave exactly
+    ONE corpus scan in the scoring plan and plan the model side as a
+    LocalTableScan."""
+    for name in ("q_unigram_logloss", "q_dsir_weights"):
+        df, problems = _lm_oracle_problems(spark, sf_dir, name)
+        assert not problems, f"{name}: " + " | ".join(problems)
+        _assert_collected_model_one_corpus_scan(df)
 
 
 def test_bpe_training_releases_checkpoint_storage(spark):
